@@ -66,6 +66,9 @@ ENGINE_CONF: dict[str, str] = {
         in ("1", "true", "yes", "on")
         else "false"
     ),
+    # no stage-progress frames on stderr: bench.py's committed stderr
+    # and any log a headless run keeps stay machine-readable
+    "spark.ui.showConsoleProgress": "false",
 }
 
 

@@ -29,15 +29,21 @@ MERGE/commit; the protocol here is what those formats do internally):
     <path>/closed/seg=<v>/               compacted closed segment (immutable)
     <path>/_snapshots/<seq>.json         archived manifests (time travel,
                                          retained for the last k flips)
+    <path>/_staging/batch=<b>/           batch b's write before its renames
+                                         (removed by the GC after the flip)
 
-Crash safety / effectively-exactly-once: both data writes go to
-batch-id-addressed directories (idempotent overwrite on replay of the
-same micro-batch); the manifest is flipped LAST via atomic
-``os.replace``; reference-based GC runs only after the flip. A crash
+Crash safety / effectively-exactly-once: each micro-batch is ONE write
+job into ``_staging/batch=<id>`` (idempotent overwrite on replay of the
+same micro-batch), whose partitions are then renamed into the
+batch-id-addressed ``closed/batch=<id>`` and ``current/v=<id>/``
+directories; no manifest references any of them yet. The manifest is
+flipped LAST via atomic ``os.replace``; reference-based GC (which also
+removes committed batches' staging directories) runs only after the
+flip. So the order is staged write → renames → flip → GC. A crash
 anywhere leaves the previous manifest — and therefore the previous
 committed state — fully readable; Structured Streaming replays the
-batch, the writes land in the same directories, and the flip happens
-once. Readers never observe a half-written store.
+batch, the write and the renames land at the same addresses, and the
+flip happens once. Readers never observe a half-written store.
 """
 
 from __future__ import annotations
@@ -51,11 +57,11 @@ from pyspark.sql import functions as F
 
 MANIFEST = "_MANIFEST.json"
 BUCKET = "__bucket"
+STAGING = "_staging"
 
-# Concurrency of the two per-batch commit writes (closed delta +
-# current buckets) — see Scd2Store.commit. 1 = sequential (the pre-r8
-# protocol, kept as a measurement/debug knob).
-_COMMIT_POOL_WORKERS = 2
+# staging partition column of Scd2Store.commit's one write: the
+# current row's bucket, or -1 for a closed row
+PART = "__part"
 
 
 class Scd2Store:
@@ -104,6 +110,9 @@ class Scd2Store:
 
     def _segment_dir(self, version: int) -> str:
         return os.path.join(self.path, "closed", f"seg={version}")
+
+    def _staging_dir(self, batch_id: int) -> str:
+        return os.path.join(self.path, STAGING, f"batch={batch_id}")
 
     def bucket_expr(self, key_col: str | None = None) -> Column:
         key = key_col or self.key_col
@@ -263,16 +272,6 @@ class Scd2Store:
                     os.remove(os.path.join(snaps, f))
         return manifest
 
-    @staticmethod
-    def _has_data(directory: str) -> bool:
-        try:
-            return any(
-                f.startswith("part-") and not f.endswith(".crc")
-                for f in os.listdir(directory)
-            )
-        except FileNotFoundError:
-            return False
-
     def commit(
         self,
         new_current: DataFrame,
@@ -294,16 +293,21 @@ class Scd2Store:
 
         Write order (each step idempotent under replay of ``batch_id``):
 
-        1. closed delta → closed/batch=<id> (overwrite)
-        2. touched current buckets → current/v=<id>/__bucket=<i>
-           (partitioned write; the snapshots they were DERIVED from live
-           in other directories, so there is no same-path read/write
-           hazard and no staging double-write)
+        1. staged write: ONE partitioned write job of the closed delta
+           (partition -1) and the touched current buckets (partition
+           <i>) into _staging/batch=<id> (overwrite). The snapshots the
+           current rows were DERIVED from live in other directories, so
+           there is no same-path read/write hazard
+        2. renames: partition -1 → closed/batch=<id>, partition <i> →
+           current/v=<id>/__bucket=<i>, after removing whatever a failed
+           attempt left at those addresses (no manifest references them
+           until step 3)
         3. manifest flip: touched buckets point at <id> (or lose their
            reference if emptied), untouched buckets KEEP their old
            references (carry-forward, zero I/O)
-        4. reference-based GC (after the flip, so a crash mid-GC can
-           only leave orphans, never dangling references)
+        4. reference-based GC, which also removes the staging directory
+           (after the flip, so a crash mid-GC can only leave orphans,
+           never dangling references)
         """
         m = self.manifest() if self.exists() else None
         prev_closed = m["closed_batches"] if m else []
@@ -311,71 +315,35 @@ class Scd2Store:
 
         closed_dir = self._closed_dir(batch_id)
         version_dir = os.path.join(self.path, "current", f"v={batch_id}")
+        staging = self._staging_dir(batch_id)
 
-        # repartition to n_buckets before writing: the merge plan ends
-        # at shuffle.partitions (32+) tasks, so the unshuffled write
-        # emits ~tasks×buckets near-empty parquet files per batch plus
-        # their commit-protocol renames — measured as the dominant
-        # per-micro-batch cost. One small batch-proportional shuffle
-        # buys one file per bucket (the small-files story this store
-        # exists to control; compact_closed then has ~32× fewer files
-        # to fold)
-        def _write_closed() -> None:
-            closed_delta.repartition(
-                self.n_buckets, F.col(self.key_col)
-            ).write.mode("overwrite").parquet(closed_dir)
+        # Repartitioning by bucket with no partition count lets AQE size
+        # the tasks to the batch, and places each bucket in exactly one
+        # task, so a bucket directory gets one file per batch (the
+        # small-files story this store exists to control). Closed rows
+        # go with their key's bucket, so they spread over the tasks.
+        tagged = new_current.withColumn(PART, self.bucket_expr()).unionByName(
+            closed_delta.withColumn(PART, F.lit(-1).cast("long"))
+        )
+        tagged.repartition(self.bucket_expr()).write.mode(
+            "overwrite"
+        ).partitionBy(PART).parquet(staging)
 
-        def _write_current() -> None:
-            bucketed = new_current.withColumn(BUCKET, self.bucket_expr())
-            bucketed.repartition(F.col(BUCKET)).write.mode(
-                "overwrite"
-            ).partitionBy(BUCKET).parquet(version_dir)
-
-        # The two writes run CONCURRENTLY (r8, VERDICT r7 #7): each is
-        # fixed-overhead dominated on a micro-batch (commit-protocol
-        # renames + writer init, not data volume — the 32 threads are
-        # mostly idle during either), and the crash protocol never
-        # ordered them: both target version-addressed directories that
-        # are orphans until the manifest flip below, which still
-        # happens strictly after BOTH complete. They share the
-        # caller-persisted `merged` lineage; cache block locks dedupe
-        # the materialization. Interleaved A/B in BASELINE.md r8:
-        # 1.21× rows/s on the bench replay. `_COMMIT_POOL_WORKERS = 1`
-        # restores the sequential protocol (measurement/debug knob).
-        # InheritableThread, not ThreadPoolExecutor (code-review r8):
-        # under pinned-thread mode (PySpark default) plain child
-        # threads do NOT inherit SparkContext local properties, so
-        # job-group cancellation (stopping the streaming query) and
-        # scheduler-pool assignment would miss the two write jobs.
-        if _COMMIT_POOL_WORKERS <= 1:
-            _write_closed()
-            _write_current()
-        else:
-            from pyspark import InheritableThread
-
-            errs: list[BaseException] = []
-
-            def _run(fn) -> None:
-                try:
-                    fn()
-                except BaseException as exc:  # noqa: BLE001 — re-raised below
-                    errs.append(exc)
-
-            threads = [
-                InheritableThread(target=_run, args=(fn,))
-                for fn in (_write_closed, _write_current)
-            ]
-            for t in threads:
-                t.start()
-            for t in threads:
-                t.join()
-            if errs:
-                raise errs[0]
-        written = {
-            int(d.split("=", 1)[1])
-            for d in os.listdir(version_dir)
-            if d.startswith(f"{BUCKET}=")
-        }
+        for d in (closed_dir, version_dir):
+            shutil.rmtree(d, ignore_errors=True)
+        written: set[int] = set()
+        has_closed = False
+        for d in os.listdir(staging):
+            if not d.startswith(f"{PART}="):
+                continue
+            part = int(d.split("=", 1)[1])
+            if part < 0:
+                target, has_closed = closed_dir, True
+            else:
+                target = self._bucket_dir(batch_id, part)
+                written.add(part)
+            os.makedirs(os.path.dirname(target), exist_ok=True)
+            os.rename(os.path.join(staging, d), target)
         touched = set(touched_buckets) | written if touched_buckets else written
 
         refs = dict(prev_refs)
@@ -385,7 +353,7 @@ class Scd2Store:
             else:
                 refs.pop(str(b), None)  # bucket emptied by soft deletes
         closed_batches = [b for b in prev_closed if b != batch_id]
-        if self._has_data(closed_dir):
+        if has_closed:
             closed_batches.append(batch_id)
         manifest = self._flip(
             {
@@ -533,7 +501,20 @@ class Scd2Store:
         reference keeps alive. Untouched buckets may legitimately point
         at arbitrarily old versions forever, so GC is reference-based,
         not age-based; with snapshot retention > 1, directories stay
-        until every snapshot referencing them expires."""
+        until every snapshot referencing them expires.
+
+        Also deletes the staging directory of every batch up to the
+        manifest version: the committed batch's own, and any a crashed
+        commit left behind. An in-flight commit's staging directory
+        carries a batch id > version, so it is never touched."""
+        staging_root = os.path.join(self.path, STAGING)
+        if os.path.isdir(staging_root):
+            for d in os.listdir(staging_root):
+                kind, _, raw = d.partition("=")
+                if kind == "batch" and raw.isdigit() and int(raw) <= manifest["version"]:
+                    shutil.rmtree(os.path.join(staging_root, d), ignore_errors=True)
+            if not os.listdir(staging_root):
+                os.rmdir(staging_root)
         live = {
             (str(v), int(b))
             for rm in self._retained_manifests(manifest)

@@ -133,8 +133,7 @@ def _merge_batch(
             # what turns the current-rows read into a pruned listing —
             # and it doubles as the empty-batch probe (an empty batch
             # touches zero buckets), saving one job per micro-batch on
-            # the hot path (measured: per-batch cost is fixed-overhead
-            # dominated, ~2.4 s at 32 threads regardless of batch size)
+            # the hot path
             touched = [
                 r.b
                 for r in changes.select(store.bucket_expr().alias("b"))
@@ -189,16 +188,12 @@ def _merge_batch(
                 changes, key, ts_col, order_cols=("cdc_sequence_id",),
                 tombstone_col=tombstone_col, skew_protection=False,
             )
-        merged = merged.persist()  # one evaluation feeds both commit writes
-        try:
-            store.commit(
-                new_current=merged.filter(F.col("is_current") == "Y"),
-                closed_delta=merged.filter(F.col("is_current") == "N"),
-                batch_id=batch_id,
-                touched_buckets=touched or None,
-            )
-        finally:
-            merged.unpersist()
+        store.commit(
+            new_current=merged.filter(F.col("is_current") == "Y"),
+            closed_delta=merged.filter(F.col("is_current") == "N"),
+            batch_id=batch_id,
+            touched_buckets=touched or None,
+        )
     finally:
         _pinned.unpersist()
     if compact_every:
@@ -254,15 +249,11 @@ def splice_quarantine(
     out_store = Scd2Store(out_path, key_col=key, n_buckets=n_buckets)
     if out_store.exists():
         raise FileExistsError(f"splice target already exists: {out_path}")
-    merged = merged.persist()
-    try:
-        out_store.commit(
-            new_current=merged.filter(F.col("is_current") == "Y"),
-            closed_delta=merged.filter(F.col("is_current") == "N"),
-            batch_id=0,
-        )
-    finally:
-        merged.unpersist()
+    out_store.commit(
+        new_current=merged.filter(F.col("is_current") == "Y"),
+        closed_delta=merged.filter(F.col("is_current") == "N"),
+        batch_id=0,
+    )
     return n_late
 
 

@@ -8,6 +8,8 @@ Covers the four stores the SCD2 history store's crash tests
 record), rollup_stream and dedup_ingest (torn batch=<id> snapshot
 dirs, commitdirs.py), and the kafka-loopback STREAM SINK (append +
 length-fence + marker flip, kafka_loopback.py _LoopbackStreamWriter).
+It also kills the SCD2 store's commit between its staged write and
+its manifest flip.
 """
 
 from __future__ import annotations
@@ -38,6 +40,7 @@ from architrave_project_apache_nifi_spark.streaming.dedup_ingest import (
     read_corpus,
     read_fingerprints,
 )
+from architrave_project_apache_nifi_spark.streaming.history_store import Scd2Store
 from architrave_project_apache_nifi_spark.streaming.rollup_stream import (
     read_rollup,
     read_state,
@@ -384,3 +387,64 @@ def test_kafka_sink_crash_after_fence_before_append(spark, tmp_path):
     w1 = _LoopbackStreamWriter(broker, "t", 1)
     w1.commit(_rows(w1, ["b"]), batchId=1)
     assert _topic_values(spark, broker, "t") == ["a", "b"]
+
+
+# ---------------------------------------------------------------------------
+# SCD2 history store: staged write → renames → manifest flip
+# ---------------------------------------------------------------------------
+
+
+def test_scd2_commit_crash_before_flip_replays_once(spark, tmp_path, monkeypatch):
+    """Kill Scd2Store.commit right after its staged write (before any
+    rename), then midway through the renames. Each time the previous
+    manifest serves the same rows, a replay of the same batch id
+    commits exactly once, and no staging directory survives."""
+    hist = str(tmp_path / "hist")
+    store = Scd2Store(hist, key_col="ProductID", n_buckets=4)
+    schema = "ProductID INT, v STRING, is_current STRING"
+    current = {k: f"v{k}" for k in range(1, 5)}
+    closed_all: list[tuple] = []
+
+    def frames(closed):
+        return (
+            spark.createDataFrame([(k, v, "Y") for k, v in current.items()], schema),
+            spark.createDataFrame(closed, schema),
+        )
+
+    def expected():
+        return sorted(closed_all + [(k, v, "Y") for k, v in current.items()])
+
+    def stored():
+        return sorted(map(tuple, store.read_all(spark).collect()))
+
+    store.commit(*frames([]), batch_id=0)
+    real_rename = os.rename
+    for batch_id, renames_before_crash in ((1, 0), (2, 1)):
+        before, seq = expected(), store.manifest()["seq"]
+        assert stored() == before
+        closed = [(batch_id, current[batch_id], "N")]
+        current[batch_id] += "+"
+        done: list[str] = []
+
+        def crashing_rename(src, dst):
+            if len(done) == renames_before_crash:
+                raise RuntimeError("injected crash in commit")
+            real_rename(src, dst)
+            done.append(dst)
+
+        monkeypatch.setattr(os, "rename", crashing_rename)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            store.commit(*frames(closed), batch_id=batch_id)
+        monkeypatch.undo()
+        assert len(done) == renames_before_crash
+        assert os.path.isdir(os.path.join(hist, "_staging", f"batch={batch_id}"))
+        assert store.manifest()["seq"] == seq
+        assert stored() == before
+
+        store.commit(*frames(closed), batch_id=batch_id)  # replay
+        closed_all.extend(closed)
+        m = store.manifest()
+        assert (m["version"], m["seq"]) == (batch_id, seq + 1)
+        assert m["closed_batches"].count(batch_id) == 1
+        assert stored() == expected()
+        assert not os.path.exists(os.path.join(hist, "_staging"))

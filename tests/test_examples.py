@@ -13,6 +13,8 @@ import sys
 
 import pytest
 
+from tests.conftest import TEST_DRIVER_MEM
+
 REPO = os.path.join(os.path.dirname(__file__), "..")
 
 
@@ -34,6 +36,8 @@ def test_example_runs(script, expect):
     proc = subprocess.run(
         [sys.executable, script],
         cwd=REPO,
+        # the examples' get_spark takes its heap from here (48g otherwise)
+        env={"SPARK_GRAFT_DRIVER_MEM": TEST_DRIVER_MEM, **os.environ},
         capture_output=True,
         text=True,
         timeout=420,

@@ -657,6 +657,38 @@ def test_stream_bulk_replay_throughput_harness(spark, tmp_path):
     assert a == b
 
 
+def test_store_commit_writes_one_file_per_directory(spark, tmp_path):
+    """A commit is one partitioned write sized to the batch: a tiny
+    batch leaves one data file in its closed directory and one in each
+    bucket it wrote."""
+    import os
+
+    from architrave_project_apache_nifi_spark.streaming.history_store import (
+        Scd2Store,
+    )
+
+    hist = str(tmp_path / "hist")
+    store = Scd2Store(hist, key_col="ProductID", n_buckets=4)
+    schema = "ProductID INT, v STRING, is_current STRING"
+    store.commit(
+        new_current=spark.createDataFrame(
+            [(1, "a2", "Y"), (2, "b", "Y"), (3, "c", "Y")], schema
+        ),
+        closed_delta=spark.createDataFrame([(1, "a", "N")], schema),
+        batch_id=0,
+    )
+
+    def data_files(d):
+        return [f for f in os.listdir(d) if f.startswith("part-")
+                and not f.endswith(".crc")]
+
+    assert len(data_files(os.path.join(hist, "closed", "batch=0"))) == 1
+    buckets = store.manifest()["current_buckets"]
+    assert buckets
+    for b, v in buckets.items():
+        assert len(data_files(store._bucket_dir(v, int(b)))) == 1
+
+
 def test_store_commit_partial_concurrent_write_failure_is_replayable(
     spark, tmp_path
 ):
